@@ -15,23 +15,12 @@ import os
 
 import duckdb
 
-TABLE_NAMES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
+from thisishappening_spark.sources.tables import TABLES
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
-    for t in TABLE_NAMES:
+    for t in TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(path):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")

@@ -1,20 +1,11 @@
-"""Geospatial column functions (SURVEY §2.8 F3/F4/F17/F18, §2.2 P1/Q2).
+"""Geospatial SQL expressions (SURVEY §2.8 F3/F4, §2.2 P1/Q2).
 
-All pure `pyspark.sql.functions` expressions — JVM-side, codegen-friendly,
-no UDFs. Earth radius matches geopy's EARTH_RADIUS (6371.0087714150598 km),
-which the reference uses to convert km → radians for DBSCAN
-(reference cluster_utils.py:4,25).
+All pure Spark SQL expressions — JVM-side, codegen-friendly, no UDFs.
 """
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-EARTH_RADIUS_KM = 6371.0087714150598  # geopy.distance.EARTH_RADIUS
 
 
 @dataclass(frozen=True)
@@ -26,10 +17,6 @@ class BoundingBox:
     south: float
     east: float
     north: float
-
-    @classmethod
-    def from_list(cls, bbox: list[float]) -> "BoundingBox":
-        return cls(west=bbox[0], south=bbox[1], east=bbox[2], north=bbox[3])
 
 
 def inbounds_closed(lon: str, lat: str, bbox: BoundingBox) -> str:
@@ -56,24 +43,6 @@ def inbounds_half_open(lon: str, lat: str, bbox: BoundingBox) -> str:
         f"{lon} >= {flit(bbox.west)} AND {lon} < {flit(bbox.east)} "
         f"AND {lat} >= {flit(bbox.south)} AND {lat} < {flit(bbox.north)}"
     )
-
-
-def haversine_km(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:
-    """Great-circle distance in km (proper lat/lon argument order)."""
-    rlat1, rlat2 = F.radians(lat1), F.radians(lat2)
-    dlat = F.radians(lat2 - lat1) / 2
-    dlon = F.radians(lon2 - lon1) / 2
-    a = F.sin(dlat) ** 2 + F.cos(rlat1) * F.cos(rlat2) * F.sin(dlon) ** 2
-    return F.lit(2 * EARTH_RADIUS_KM) * F.asin(F.sqrt(a))
-
-
-def ref_haversine_km(lon1: Column, lat1: Column, lon2: Column, lat2: Column) -> Column:
-    """The reference's *swapped* haversine: it feeds sklearn's haversine
-    metric `[lon, lat]` pairs where the metric expects `[lat, lon]`
-    (reference cluster_utils.py:29), so longitudes play the latitude role.
-    Bug-compatible on purpose — cluster parity requires the same metric
-    (SURVEY §7.4 quirk list)."""
-    return haversine_km(lon1, lat1, lon2, lat2)
 
 
 def polygon_ring_centroid(ring: str) -> tuple[str, str]:
@@ -106,21 +75,3 @@ def polygon_ring_bbox(ring: str) -> str:
         f"'east', array_max({lons}), 'north', array_max({lats}))"
     )
 
-
-def bounding_box_dims_km(bbox: BoundingBox) -> tuple[float, float]:
-    """F17: (height_km, width_km) of a bbox. The reference uses geodesic
-    (Karney/WGS84) distance (reference data_utils.py:57-61); spherical
-    haversine differs <0.5% which only perturbs grid cell *count*, not
-    query semantics — documented deviation (SURVEY §2.8 F17)."""
-
-    def hav(lat1, lon1, lat2, lon2):
-        rl1, rl2 = math.radians(lat1), math.radians(lat2)
-        a = (
-            math.sin(math.radians(lat2 - lat1) / 2) ** 2
-            + math.cos(rl1) * math.cos(rl2) * math.sin(math.radians(lon2 - lon1) / 2) ** 2
-        )
-        return 2 * EARTH_RADIUS_KM * math.asin(math.sqrt(a))
-
-    height = hav(bbox.south, bbox.west, bbox.north, bbox.west)
-    width = hav(bbox.south, bbox.west, bbox.south, bbox.east)
-    return height, width

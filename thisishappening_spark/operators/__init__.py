@@ -1,2 +1,2 @@
-"""Relational + analytic operators (admission filter, windows, KDE,
-clustering, dedup, similarity, text stats, retention)."""
+"""Analytic operators: admission filter, status ingest, dedup, similarity
+search and text statistics."""

@@ -20,22 +20,14 @@ as DataFrame transformations whose shuffles are bounded by design:
   per-bit weighted majorities; near-dup candidates share a fingerprint
   nibble (pigeonhole on Hamming distance), again an equi-join.
 
-Two hashing modes:
-
-- ``dictionary`` (opt-in, used by the registry's correctness entries):
-  shingle/token IDs come
-  from a rank over the distinct-shingle dictionary, and MinHash permutes
-  IDs with fixed ``(a*id + b) % p`` parameters. Every step is plain
-  integer arithmetic, so a SQL oracle (DuckDB) reproduces it bit-for-bit.
-  The dictionary rank is a global sort of *distinct* shingles — fine up to
-  dictionary sizes that sort comfortably (hundreds of millions), and the
-  deterministic choice for differential testing.
-- ``xxhash64`` (the DEFAULT, and the scale path): shingle IDs come from
-  Spark's built-in ``xxhash64`` — no dictionary, no global sort,
-  embarrassingly parallel. Not oracle-reproducible (DuckDB's hash
-  differs), covered by pytest. The dictionary mode's global row_number
-  sort over distinct shingles is a single-partition bottleneck at corpus
-  scale, so it must never be the default a user copies.
+Token ids: shingles and tokens get integer ids from one dictionary rank
+(:func:`ranked_dictionary`, joined back by :func:`dictionary_ids`): the
+1-based rank of the key among the distinct keys in sorted order. MinHash
+permutes those ids with fixed ``(a*id + b) % p`` parameters, SimHash and
+``textstats.doc_fingerprint`` use the same ids, and every step is plain
+integer arithmetic, so a SQL oracle (DuckDB) reproduces it bit-for-bit.
+The rank is two-phase (per-prefix-bucket sort plus an O(buckets) offset
+table), so only the offset table ever crosses a single partition.
 
 Reference parity note: the reference app has no dedup; this module covers
 the brief's training-pipeline surface (SURVEY.md §2 extension).
@@ -49,7 +41,7 @@ from pyspark.sql import functions as F
 # Modulus and fixed (a, b) parameters for the MinHash permutation family
 # h_i(x) = (a_i * x + b_i) % MINHASH_P. Any fixed odd multipliers work; these
 # are arbitrary primes well below 2^31 so a*id stays far from BIGINT overflow
-# (ids are dictionary ranks or xxhash64 folded to 31 bits).
+# (ids are dictionary ranks, far below 2^31).
 MINHASH_P = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
 MINHASH_PARAMS: list[tuple[int, int]] = [
     (1_000_000_007, 12_345),
@@ -168,15 +160,18 @@ DICT_BUCKET_CHARS = 4
 
 
 def ranked_dictionary(keys: DataFrame, key_col: str, id_col: str) -> DataFrame:
-    """(key, id) with id = 1-based rank of the key among the distinct keys
-    in sorted order — the same value ``row_number() OVER (ORDER BY key)``
-    assigns, WITHOUT a single-partition sort of the dictionary.
+    """(key, id) with id = 1-based rank of the key among the distinct
+    non-NULL keys in sorted order — the same value
+    ``row_number() OVER (ORDER BY key)`` assigns over those keys, WITHOUT a
+    single-partition sort of the dictionary.
 
-    The r21 verdict flagged the global-window rank as the one remaining
-    scale-killer-shaped node in the dictionary hash mode (a row_number
-    over a Window with no PARTITION BY is a single-partition Exchange +
-    Sort of every distinct key). Two-phase replacement (guide §2.2/§2.5 —
-    parallelize the sort, shuffle only metadata for the cross-partition
+    NULL keys get no id: they are dropped before the distinct, so the ids
+    are dense 1..n over the n distinct non-NULL keys. That matches the
+    DuckDB oracle, which sorts NULL last, for every non-NULL key.
+
+    A row_number over a Window with no PARTITION BY is a single-partition
+    Exchange + Sort of every distinct key. Two-phase replacement
+    (parallelize the sort, shuffle only metadata for the cross-partition
     fix-up):
 
     1. bucket = first ``DICT_BUCKET_CHARS`` chars of the key (order-
@@ -190,11 +185,12 @@ def ranked_dictionary(keys: DataFrame, key_col: str, id_col: str) -> DataFrame:
     4. id = offset + per-bucket row number.
 
     Both consumers of the distinct-key exchange (the per-bucket rank and
-    the bucket counts) read the identical subtree, so the physical planner
-    reuses one shuffle (same ReusedExchange pattern jaccard_pairs pins).
+    the bucket counts) read the identical subtree, so the executed plan
+    reuses one shuffle (``ReusedExchange``; pinned by
+    tests/test_ranked_dictionary.py).
     """
     b = f"substring({key_col}, 1, {DICT_BUCKET_CHARS})"
-    rw = keys.select(key_col).distinct().selectExpr(
+    rw = keys.select(key_col).filter(f"{key_col} IS NOT NULL").distinct().selectExpr(
         key_col,
         f"{b} AS __b",
         f"row_number() OVER (PARTITION BY {b} ORDER BY {key_col}) AS __r",
@@ -213,29 +209,13 @@ def ranked_dictionary(keys: DataFrame, key_col: str, id_col: str) -> DataFrame:
     )
 
 
-def shingle_dictionary(shingles: DataFrame) -> DataFrame:
-    """(shingle, sid) with sid = rank of the shingle in sorted order.
-
-    Deterministic-integer IDs so the SQL oracle can reproduce MinHash
-    exactly. Ranked by the two-phase bucketed rank (see
-    :func:`ranked_dictionary`) — identical ids to the old global
-    row_number, no single-partition sort of the dictionary. For the
-    non-differential scale path use ``hash_mode='xxhash64'`` in
-    :func:`minhash_signatures` and skip the dictionary entirely.
-    """
-    return ranked_dictionary(shingles, "shingle", "sid")
-
-
-def _shingle_ids(shingles: DataFrame, hash_mode: str) -> DataFrame:
-    if hash_mode == "dictionary":
-        d = shingle_dictionary(shingles)
-        return shingles.join(d, "shingle").select("doc_id", "sid")
-    if hash_mode == "xxhash64":
-        # Fold to 31 bits so (a * sid) stays far below BIGINT overflow.
-        return shingles.select(
-            "doc_id", F.expr(f"pmod(xxhash64(shingle), {MINHASH_P}) AS sid")
-        )
-    raise ValueError(f"unknown hash_mode {hash_mode!r}")
+def dictionary_ids(rows: DataFrame, key_col: str, id_col: str, *keep: str) -> DataFrame:
+    """(*keep, id_col): each row's ``key_col`` replaced by its
+    :func:`ranked_dictionary` id. The one token-id path of MinHash, SimHash
+    and ``textstats.doc_fingerprint``. Rows with a NULL key drop out (the
+    inner join finds no id for them)."""
+    d = ranked_dictionary(rows, key_col, id_col)
+    return rows.join(d, key_col).select(*keep, id_col)
 
 
 def minhash_signatures(
@@ -243,7 +223,6 @@ def minhash_signatures(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Per-document MinHash signature: columns mh0..mh{K-1}.
 
@@ -251,7 +230,7 @@ def minhash_signatures(
     (map-side partial min per component), so the shuffle carries K ints per
     document regardless of document size.
     """
-    ids = _shingle_ids(doc_shingles(docs, n, text_col, id_col), hash_mode)
+    ids = dictionary_ids(doc_shingles(docs, n, text_col, id_col), "shingle", "sid", "doc_id")
     # One parsed string per component instead of ~8 Py4J round trips each
     # (same expression: CAST(a AS BIGINT) * sid + b, then % p).
     aggs = [
@@ -283,36 +262,11 @@ def _band_table(signatures: DataFrame) -> DataFrame:
     ).select("doc_id", "sig", F.expr("bk.band AS band"), F.expr("bk.band_key AS band_key"))
 
 
-def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
-    """Band the K-component signature into LSH_BANDS buckets and emit
-    candidate pairs (doc_a < doc_b) that collide in ≥1 band.
-
-    Candidate generation is an equi-join on (band, key): documents never
-    pair up unless a whole band matches, so the pair count tracks the
-    number of real near-dups, not n². At 100 TB the band table is
-    (LSH_BANDS × n_docs) rows of small strings — a normal shuffle join.
-    """
-    bands = _band_table(signatures)
-    left = bands.alias("l")
-    right = bands.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_key") == F.col("r.band_key"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_mode: str = "xxhash64",
     max_bucket_df: int | None = None,
 ) -> DataFrame:
     """LSH candidate pairs with the estimated Jaccard (fraction of equal
@@ -346,7 +300,7 @@ def minhash_lsh_pairs(
     signature arrays carried through the bucket structs (a 16-term
     zip_with), so no join back to the signatures is needed.
     """
-    sigs = minhash_signatures(docs, n, text_col, id_col, hash_mode)
+    sigs = minhash_signatures(docs, n, text_col, id_col)
     bands = _band_table(sigs)
     buckets = (
         bands.groupBy("band", "band_key")
@@ -439,7 +393,6 @@ def simhash(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Per-document SimHash fingerprint (SIMHASH_BITS bits) over unigram
     tokens weighted by occurrence count.
@@ -454,13 +407,7 @@ def simhash(
         F.col(id_col).alias("doc_id"),
         F.explode(F.split(F.col(text_col), " ")).alias("tok"),
     )
-    if hash_mode == "dictionary":
-        d = ranked_dictionary(toks, "tok", "tid")
-        ids = toks.join(d, "tok").select("doc_id", "tid")
-    elif hash_mode == "xxhash64":
-        ids = toks.select("doc_id", F.expr(f"pmod(xxhash64(tok), {MINHASH_P}) AS tid"))
-    else:
-        raise ValueError(f"unknown hash_mode {hash_mode!r}")
+    ids = dictionary_ids(toks, "tok", "tid", "doc_id")
     params = MINHASH_PARAMS[:SIMHASH_BITS]
     # Parsed-string form of the same expressions (see doc_shingles note):
     # the Column form of these 16 majorities + the fingerprint fold was

@@ -131,23 +131,6 @@ def _lattice_matrix(n_planes: int, dim: int):
     return comp.reshape(n_planes, dim)
 
 
-def hyperplane_signature(vec_name: str, n_planes: int = 8, dim: int = 64) -> Column:
-    """Random-hyperplane LSH signature as a small integer: bit p is the
-    sign of <v, h_p> with h_p a deterministic lattice direction.
-    ``vec_name`` names an ``array<double>`` column in scope. Column-
-    expression form (8 planes × dim multiply-adds — small enough to stay
-    a plain parsed expression); the ANN operator's 32-plane variant uses
-    the Arrow-batched matmul in :func:`lsh_buckets_udf` instead, where an
-    expression tree this wide would bloat optimizer/codegen time.
-    """
-    H = _lattice_matrix(n_planes, dim)
-    bits = []
-    for p in range(n_planes):
-        proj = "+".join(f"{vec_name}[{i}]*({H[p, i]!r})" for i in range(dim))
-        bits.append(f"(CASE WHEN ({proj}) > 0 THEN {1 << p} ELSE 0 END)")
-    return F.expr("CAST(" + "+".join(bits) + " AS INT)")
-
-
 def lsh_buckets_udf(n_tables: int = 8, planes_per_table: int = 4, dim: int = 64):
     """Arrow-batched pandas UDF: vector → array of ``n_tables`` bucket
     ids (one ``planes_per_table``-bit bucket per table). Table t uses
@@ -186,12 +169,11 @@ def ann_lsh_topk(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    multiprobe_hamming: int = 1,
 ) -> DataFrame:
     """Approximate top-k via multi-table sign-LSH: score only candidates
-    that share a bucket with the query in ≥1 of ``n_tables`` tables
-    (expanded by ``multiprobe_hamming``-bit probes per table), then
-    exact-rerank with the same cosine as the brute-force path.
+    that share a bucket with the query, or a bucket one bit away from it
+    (Hamming-1 probes), in ≥1 of ``n_tables`` tables, then exact-rerank
+    with the same cosine as the brute-force path.
 
     Scale: the index is ``n_tables`` small (tbl, bucket) entries per
     vector; candidate generation is an equi-join on (tbl, bucket), so the
@@ -212,20 +194,11 @@ def ann_lsh_topk(
     rerank (measured multiplicity 3.1× on the sf0.1 fixture), so each
     pair pays the decimal-exact dot product once.
 
-    Dedup-exchange note (r22): the dedup used to distinct on
-    (query_id, vid, v, n2) — every collision shuffled a 64-double vector
-    plus a decimal, and the hash/compare normalized the full array per
-    row (``knownfloatingpointnormalized(transform(v, …))`` in the r21
-    plan). (v, n2) are functionally determined by vid, so the distinct
-    now runs on the bare (query_id, vid) ids — 16 bytes a row — and the
-    vectors are re-attached afterwards by an equi-join on vid against the
-    plain scan subtree (no LSH, no Python). The join is left to the
-    planner/AQE deliberately: locally the corpus side is kilobytes and
-    broadcasts; at scale AQE keeps it a shuffle join, which moves each
-    corpus vector at most once — strictly less than shuffling one vector
-    per collision. The LSH entry table itself also slims to
-    (vid, tbl, bucket): the signature UDF's stage no longer computes or
-    carries norms.
+    Dedup-key note (r22): the dedup groups on the bare (query_id, vid)
+    pair and re-attaches (v, n2) with ``first()``, since both are
+    functionally determined by vid. The grouping then hashes two longs
+    instead of normalizing a 64-double vector per collision row, and no
+    re-join against the corpus is needed.
     """
     v = emb.select(F.col(id_col).alias("vid"), as_double_vec(vec_col).alias("v"))
     base = v.select("vid", "v", F.expr(f"{norm2_dec('v')} AS n2"))
@@ -233,9 +206,7 @@ def ann_lsh_topk(
     ent = base.select(
         "vid", "v", "n2", F.posexplode(buckets(F.col("v"))).alias("tbl", "bucket")
     )
-    probes = ["bucket"]
-    if multiprobe_hamming >= 1:
-        probes += [f"bucket ^ {1 << j}" for j in range(planes_per_table)]
+    probes = ["bucket"] + [f"bucket ^ {1 << j}" for j in range(planes_per_table)]
     q = ent.filter(F.col("vid").isin(query_ids)).selectExpr(
         "vid AS query_id",
         "tbl AS q_tbl",

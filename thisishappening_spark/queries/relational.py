@@ -614,8 +614,8 @@ def q_local_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q11/F23 UTC→local calendar-day filter (reference app.py:489-506).
 
     Fixed −5h offset (the reference's America/New_York winter offset) keeps
-    the oracle engine-independent; `plans.temporal.to_local_day` exposes the
-    full zone-aware variant via from_utc_timestamp.
+    the oracle engine-independent; a zone-aware (DST-correct) variant would
+    use from_utc_timestamp instead.
     """
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy(

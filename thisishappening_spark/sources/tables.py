@@ -30,10 +30,6 @@ TABLES = [
     "embeddings",
 ]
 
-# Dimension tables small enough to broadcast at any scale factor; join
-# planning hints use this (SURVEY.md §2.3).
-BROADCAST_TABLES = {"region", "nation", "supplier", "part"}
-
 
 # Session-scoped relation cache: resolving `spark.read.parquet(path)` pays
 # driver-side file listing + parquet schema inference on EVERY call (measured
@@ -225,14 +221,3 @@ def invalidate_relation_cache(
         except Exception:
             pass  # a stopped session has nothing to refresh
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view (for the SQL surface)."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
