@@ -11,7 +11,9 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "8")  # keep test JVM light
 def spark():
     from thisishappening_spark.session import get_spark
 
-    spark = get_spark(app_name="tih-tests", shuffle_partitions=8)
+    spark = get_spark(
+        app_name="tih-tests", extra_conf={"spark.sql.shuffle.partitions": "8"}
+    )
     yield spark
     spark.stop()
 

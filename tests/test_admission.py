@@ -1,6 +1,7 @@
 """Unit tests for admission predicates not expressible over the tweets
-view: P2 (place-polygon bbox containment) and the P8 precedence-quirk
-compat mode (reference tweet_utils.py:227-229, :261-270)."""
+view: P2 (place-polygon bbox containment, applied when the input has a
+``place_ring`` column) and P8's exact-pair coordinate blocklist
+(reference tweet_utils.py:227-229, :261-270)."""
 
 from __future__ import annotations
 
@@ -8,9 +9,9 @@ from pyspark.sql import functions as F
 
 from thisishappening_spark.functions.geo import BoundingBox
 from thisishappening_spark.operators.admission import (
-    AdmissionColumns,
     AdmissionConfig,
-    admission_checks,
+    admission_check_exprs,
+    admit,
 )
 
 RING = [[-71.10, 42.30], [-71.10, 42.40], [-71.00, 42.40], [-71.00, 42.30], [-71.10, 42.30]]
@@ -50,28 +51,30 @@ def base_row(**kw):
 
 def test_place_bbox_containment(spark):
     """P2: point inside the polygon's min/max bbox passes; outside fails;
-    no ring or no coords → vacuously true (tweet_utils.py:227-229)."""
-    cfg = AdmissionConfig(columns=AdmissionColumns(place_ring="place_ring"))
+    no ring or no coords → vacuously true (tweet_utils.py:227-229). admit
+    applies it because the input has a ``place_ring`` column."""
     df = _df(
         spark,
         [
-            base_row(),  # inside ring bbox
-            base_row(longitude=-70.50),  # outside ring bbox
-            base_row(place_ring=None),  # no ring → vacuous
-            base_row(longitude=-70.50, has_coords=False),  # no coords → vacuous
+            base_row(user_id_str="1"),  # inside ring bbox
+            base_row(user_id_str="2", longitude=-70.50),  # outside ring bbox
+            base_row(user_id_str="3", place_ring=None),  # no ring → vacuous
+            # no coords → vacuous (P5 keeps it through the poi place type)
+            base_row(user_id_str="4", longitude=-70.50, has_coords=False),
         ],
     )
-    out = df.select(
-        admission_checks(cfg)["in_place_bounding_box"].alias("ok")
-    ).collect()
-    assert [r.ok for r in out] == [True, False, True, True]
+    kept = {r.user_id_str for r in admit(df, AdmissionConfig()).collect()}
+    assert [i in kept for i in "1234"] == [True, False, True, True]
+    # Without the ring column P2 does not apply: every row is admitted.
+    assert admit(df.drop("place_ring"), AdmissionConfig()).count() == 4
 
 
-def test_lat_lon_quirk_compat(spark):
-    """P8 bug-compat: truthy longitude → ONLY longitude is compared, so a
-    blocked longitude rejects at ANY latitude (the reference's conditional-
-    expression precedence, tweet_utils.py:261-270). Intent mode only
-    rejects the exact pair."""
+def test_lat_lon_blocks_exact_pair_only(spark):
+    """P8 rejects only the exact blocked pair: a blocked longitude at a
+    different latitude, or the reverse, is kept. (The reference's
+    conditional-expression precedence, tweet_utils.py:261-270, would also
+    reject a blocked longitude at any latitude; the evident intent is
+    implemented instead.)"""
     blocked = ((-71.05, 42.35),)
     rows = [
         base_row(),  # exact blocked pair
@@ -80,19 +83,13 @@ def test_lat_lon_quirk_compat(spark):
     ]
     df = _df(spark, rows)
 
-    intent = AdmissionConfig(ignore_lon_lat=blocked)
-    out = df.select(admission_checks(intent)["valid_lat_lon"].alias("ok")).collect()
+    check = admission_check_exprs(AdmissionConfig(ignore_lon_lat=blocked))["valid_lat_lon"]
+    out = df.select(F.expr(check).alias("ok")).collect()
     assert [r.ok for r in out] == [False, True, True]
-
-    quirk = AdmissionConfig(ignore_lon_lat=blocked, lat_lon_quirk_compat=True)
-    out = df.select(admission_checks(quirk)["valid_lat_lon"].alias("ok")).collect()
-    assert [r.ok for r in out] == [False, False, True]
 
 
 def test_full_conjunction_drops_each_violation(spark):
     """Each predicate independently drops its violating row."""
-    from thisishappening_spark.operators.admission import admit
-
     cfg = AdmissionConfig(
         bounding_box=BoundingBox(west=-71.2, south=42.2, east=-70.9, north=42.5),
         ignore_words=(r"\bspam\b",),
@@ -103,12 +100,12 @@ def test_full_conjunction_drops_each_violation(spark):
         ignore_reply_status=True,
         min_friends_count=2,
         min_followers_count=2,
-        columns=AdmissionColumns(place_ring="place_ring"),
     )
     rows = [
         base_row(),  # passes everything
         base_row(tweet_body=""),  # P14
         base_row(longitude=-75.0),  # P1
+        base_row(longitude=-70.95),  # P2 (inside P1's box, outside the ring's)
         base_row(tweet_body="buy spam now"),  # P3
         base_row(quoted_text="spam quoted"),  # P4
         base_row(has_coords=False, place_type="country"),  # P5

@@ -27,7 +27,7 @@ def test_differential(spark, sf_dir, name):
 
 
 def test_exact_dedup_collapses_duplicates(spark):
-    from thisishappening_spark.operators.dedup import exact_dedup, exact_dedup_groups
+    from thisishappening_spark.operators.dedup import exact_dedup_groups
 
     docs = spark.createDataFrame(
         [
@@ -41,8 +41,6 @@ def test_exact_dedup_collapses_duplicates(spark):
     )
     groups = {r["keep_doc_id"]: r["n_docs"] for r in exact_dedup_groups(docs).collect()}
     assert groups == {1: 2, 3: 2, 5: 1}
-    kept = sorted(r["doc_id"] for r in exact_dedup(docs).collect())
-    assert kept == [1, 3, 5]
 
 
 def test_minhash_estimates_track_true_jaccard(spark, sf_dir):
@@ -83,7 +81,7 @@ def test_ann_lsh_recall(spark, sf_dir):
     }
     recall = len(exact & approx) / len(exact)
     # Deterministic lattice + fixed data → deterministic result; measured
-    # 0.93 at the default 8×4-bit tables with Hamming-1 probes.
+    # 0.93 with the 8×4-bit tables and Hamming-1 probes.
     assert recall >= 0.7, f"ANN recall too low: {recall}"
 
 
@@ -203,25 +201,6 @@ def test_ngram_jaccard_reuses_postings_exchange(spark, sf_dir):
         "groupBy(shingle) postings exchange no longer reused — "
         "shingle lineage now recomputes per consumer"
     )
-
-
-def test_minhash_bucket_cap_drops_oversized_buckets(spark):
-    """max_bucket_df (the production skew guard): a duplicate cluster
-    larger than the cap stops emitting O(df²) pairs; None keeps today's
-    exact behavior."""
-    from thisishappening_spark.operators.dedup import minhash_lsh_pairs
-
-    docs = spark.createDataFrame(
-        [(i, "alpha beta gamma delta epsilon zeta") for i in range(1, 5)]
-        + [(10, "some entirely different words here now")],
-        "doc_id bigint, text string",
-    )
-    uncapped = minhash_lsh_pairs(docs).collect()
-    assert len(uncapped) == 6  # the 4-dup cluster: C(4,2) pairs
-    wide_cap = minhash_lsh_pairs(docs, max_bucket_df=10).collect()
-    assert sorted(map(tuple, wide_cap)) == sorted(map(tuple, uncapped))
-    capped = minhash_lsh_pairs(docs, max_bucket_df=3).collect()
-    assert capped == []  # every colliding bucket holds the whole 4-cluster
 
 
 def test_ann_dedups_candidates_before_rerank(spark, sf_dir):

@@ -1,6 +1,8 @@
 """Dead-code guard: every package module is imported by some other file,
-and every top-level function, class and UPPER_CASE constant of the package
-is named somewhere outside its own definition.
+every top-level function, class and UPPER_CASE constant of the package is
+named somewhere outside its own definition, and every defaulted parameter
+of a package function is passed by some caller outside ``tests/`` (an
+option with one value in use is a constant).
 
 The search covers the package, ``tests/``, ``benchmark/``, ``bench.py`` and
 ``__spark_entry__.py``. A name counts when it appears as code (a name, an
@@ -135,3 +137,48 @@ def test_every_top_level_definition_is_named_elsewhere():
             ):
                 unused.append(f"{_module_name(path)}.{name}")
     assert not unused, f"top-level names used nowhere else: {unused}"
+
+
+
+def _defaulted_params(tree: ast.Module) -> list[tuple[str, str, int | None]]:
+    """(function, parameter, position) of each parameter with a default in
+    every function of the module; position is None for keyword-only ones."""
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            a = node.args
+            positional = [*a.posonlyargs, *a.args]
+            first = len(positional) - len(a.defaults)
+            out.extend((node.name, arg.arg, i) for i, arg in enumerate(positional) if i >= first)
+            out.extend(
+                (node.name, arg.arg, None)
+                for arg, d in zip(a.kwonlyargs, a.kw_defaults)
+                if d is not None
+            )
+    return out
+
+
+def test_every_defaulted_parameter_is_passed_outside_tests():
+    """A defaulted parameter counts as passed when some call outside
+    ``tests/`` to a function of that name sets it by keyword or reaches its
+    position with positional arguments."""
+    sources = {p: t for p, t in _sources().items() if p.relative_to(ROOT).parts[0] != "tests"}
+    keywords: set[tuple[str, str]] = set()
+    positions: dict[str, int] = {}
+    for tree in sources.values():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and isinstance(node.func, (ast.Name, ast.Attribute)):
+                name = node.func.id if isinstance(node.func, ast.Name) else node.func.attr
+                positions[name] = max(positions.get(name, 0), len(node.args))
+                keywords.update((name, k.arg) for k in node.keywords)
+    unpassed = [
+        f"{_module_name(path)}.{fn}({param})"
+        for path, tree in sources.items()
+        if _in_package(path)
+        for fn, param, pos in _defaulted_params(tree)
+        if (fn, param) not in keywords and (pos is None or positions.get(fn, 0) <= pos)
+    ]
+    assert not unpassed, (
+        f"{len(unpassed)} defaulted parameters no caller outside tests/ passes "
+        f"(make each a constant): {unpassed}"
+    )

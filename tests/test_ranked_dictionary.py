@@ -7,6 +7,8 @@ reused shuffle."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -57,6 +59,34 @@ def test_ranked_dictionary_edge_keys(spark):
     small = spark.createDataFrame([(None,), ("a",), ("abcde",), ("b",)], "k string")
     got = {r["k"]: r["kid"] for r in ranked_dictionary(small, "k", "kid").collect()}
     assert got == {"a": 1, "abcde": 2, "b": 3}
+
+
+# Keys built from a few characters so shared prefixes, sub-4-char keys, the
+# empty string and duplicates are common; multibyte characters sort by
+# codepoint. Arbitrary Unicode keys and NULLs mix in.
+_KEYS = st.lists(
+    st.one_of(
+        st.text(alphabet="aAz é日本\U0001F600", max_size=6),
+        st.text(max_size=5),
+        st.none(),
+    ),
+    max_size=40,
+)
+
+
+@settings(max_examples=20, deadline=None, database=None)
+@given(keys=_KEYS)
+def test_ranked_dictionary_is_global_row_number_property(spark, keys):
+    """Over random key lists the two-phase rank assigns exactly the
+    ``row_number() OVER (ORDER BY k)`` numbering of the distinct non-NULL
+    keys. Spark orders strings by UTF-8 bytes, which is Python's codepoint
+    order, so the expected numbering is computed here without a second
+    Spark job per example (the Spark window itself is compared on the
+    fixtures above)."""
+    df = spark.createDataFrame([(k,) for k in keys], "k string")
+    got = {r["k"]: r["kid"] for r in ranked_dictionary(df, "k", "kid").collect()}
+    distinct = sorted({k for k in keys if k is not None})
+    assert got == {k: i for i, k in enumerate(distinct, 1)}
 
 
 def test_shingle_dictionary_rank_is_partitioned(spark, sf_dir):

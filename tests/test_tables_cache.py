@@ -7,6 +7,8 @@ turning into a result cache (which the bench rules forbid)."""
 
 from __future__ import annotations
 
+import os
+
 from thisishappening_spark.sources.tables import _RELATION_CACHE, load_table
 
 
@@ -124,3 +126,29 @@ def test_invalidate_relation_cache_picks_up_rewritten_data(spark, sf_dir, tmp_pa
     fresh = load_table(spark, other, "documents")
     assert fresh is not first, "invalidate must drop the pinned relation"
     assert fresh.count() == 5
+
+
+def test_invalidate_relation_cache_matches_whole_path_components(spark, sf_dir, tmp_path):
+    """Invalidating a table or an sf_dir drops only the relations at or
+    under that path: a sibling whose path merely extends it as a string
+    (``documents.parquet_v2…`` next to ``documents.parquet``, ``sf0.10``
+    next to ``sf0.1``) stays cached."""
+    from thisishappening_spark.sources.tables import invalidate_relation_cache
+
+    rows = load_table(spark, sf_dir, "documents").limit(3)
+    for d in ("d/documents", "d/documents.parquet_v2", "sf0.1/documents", "sf0.10/documents"):
+        rows.write.parquet(str(tmp_path / f"{d}.parquet"))
+
+    d = str(tmp_path / "d")
+    table = load_table(spark, d, "documents")
+    v2 = load_table(spark, d, "documents.parquet_v2")
+    invalidate_relation_cache(spark, os.path.join(d, "documents.parquet"))
+    assert load_table(spark, d, "documents") is not table
+    assert load_table(spark, d, "documents.parquet_v2") is v2
+
+    small, big = str(tmp_path / "sf0.1"), str(tmp_path / "sf0.10")
+    small_rel = load_table(spark, small, "documents")
+    big_rel = load_table(spark, big, "documents")
+    invalidate_relation_cache(spark, small)
+    assert load_table(spark, small, "documents") is not small_rel
+    assert load_table(spark, big, "documents") is big_rel

@@ -69,6 +69,9 @@ LSH_ROWS = MINHASH_K // LSH_BANDS
 # the parity of ((a_j * id + b_j) % p).
 SIMHASH_BITS = 16
 
+# Word n-gram width of every shingle (the oracle's ``t[i:i+2]`` trigrams).
+SHINGLE_N = 3
+
 
 def normalize_text(col: Column) -> Column:
     """Whitespace-collapse + trim + lowercase — the canonical form exact
@@ -76,7 +79,7 @@ def normalize_text(col: Column) -> Column:
     return F.lower(F.trim(F.regexp_replace(col, r"\s+", " ")))
 
 
-def exact_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup_groups(docs: DataFrame) -> DataFrame:
     """Exact dedup: one row per distinct normalized text with the surviving
     doc id (min id = keep-first) and the group size.
 
@@ -84,36 +87,18 @@ def exact_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "d
     shuffles. Map-side partial aggregation applies to both min and count.
     """
     return (
-        docs.select(
-            F.md5(normalize_text(F.col(text_col))).alias("text_hash"),
-            F.col(id_col),
-        )
+        docs.select(F.md5(normalize_text(F.col("text"))).alias("text_hash"), "doc_id")
         .groupBy("text_hash")
         .agg(
-            F.min(id_col).alias("keep_doc_id"),
+            F.min("doc_id").alias("keep_doc_id"),
             F.count(F.lit(1)).alias("n_docs"),
         )
     )
 
 
-def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup applied: keep one row per distinct normalized text (the
-    lowest id). Semi-join back so the full rows survive without shuffling
-    document bodies through the aggregate."""
-    keep = exact_dedup_groups(docs, text_col, id_col).select(
-        F.col("keep_doc_id").alias(id_col)
-    )
-    return docs.join(keep, on=id_col, how="left_semi")
-
-
-def doc_shingles(
-    docs: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    distinct: bool = True,
-) -> DataFrame:
-    """(doc_id, shingle) pairs: word n-grams over a whitespace split.
+def doc_shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingle) pairs: the distinct word ``SHINGLE_N``-grams of each
+    document over a whitespace split.
 
     Stays JVM-side: split + transform(sequence) + explode, no Python UDF.
     The token array is materialized as its own projection first so the
@@ -122,29 +107,24 @@ def doc_shingles(
     once per shingle position (~n_tokens× redundant work per row).
 
     Each shingle is built as ``concat_ws(" ", t[i], …, t[i+n-1])`` rather
-    than ``array_join(slice(toks, i, n))``: identical strings (verified
-    element-wise r21), but no per-position n-element array allocation
-    inside the interpreted ``transform`` lambda (higher-order functions
-    are CodegenFallback, so every saved allocation is an interpreted-path
-    saving; guide §4.1 "prefer built-ins", applied inside the lambda).
+    than ``array_join(slice(toks, i, n))``: identical strings, but no
+    per-position n-element array allocation inside the interpreted
+    ``transform`` lambda (higher-order functions are CodegenFallback, so
+    every saved allocation is an interpreted-path saving).
 
     The whole shingle expression is ONE parsed SQL string: building it
     with nested Column operators costs a Py4J round trip per operator
-    (profiled r21: the Column form of this module spent >60% of query
-    *construction* inside py4j send_command), and the bench pays
-    construction on every timed run. Same expression tree either way.
+    (the Column form of this module spent >60% of query *construction*
+    inside py4j send_command). Same expression tree either way.
     """
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), F.split(F.col(text_col), " ").alias("__toks")
-    )
+    base = docs.select("doc_id", F.split(F.col("text"), " ").alias("__toks"))
+    n = SHINGLE_N
     parts = ", ".join(f"element_at(__toks, i + {j})" for j in range(n))
     grams = (
-        f"CASE WHEN size(__toks) < {n} THEN CAST(array() AS ARRAY<STRING>) "
+        f"array_distinct(CASE WHEN size(__toks) < {n} THEN CAST(array() AS ARRAY<STRING>) "
         f"ELSE transform(sequence(1, size(__toks) - {n - 1}), "
-        f"i -> concat_ws(' ', {parts})) END"
+        f"i -> concat_ws(' ', {parts})) END)"
     )
-    if distinct:
-        grams = f"array_distinct({grams})"
     return base.select("doc_id", F.expr(f"explode({grams}) AS shingle"))
 
 
@@ -218,19 +198,14 @@ def dictionary_ids(rows: DataFrame, key_col: str, id_col: str, *keep: str) -> Da
     return rows.join(d, key_col).select(*keep, id_col)
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """Per-document MinHash signature: columns mh0..mh{K-1}.
 
     One aggregate over the exploded shingles computes all K mins at once
     (map-side partial min per component), so the shuffle carries K ints per
     document regardless of document size.
     """
-    ids = dictionary_ids(doc_shingles(docs, n, text_col, id_col), "shingle", "sid", "doc_id")
+    ids = dictionary_ids(doc_shingles(docs), "shingle", "sid", "doc_id")
     # One parsed string per component instead of ~8 Py4J round trips each
     # (same expression: CAST(a AS BIGINT) * sid + b, then % p).
     aggs = [
@@ -262,30 +237,9 @@ def _band_table(signatures: DataFrame) -> DataFrame:
     ).select("doc_id", "sig", F.expr("bk.band AS band"), F.expr("bk.band_key AS band_key"))
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_bucket_df: int | None = None,
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     """LSH candidate pairs with the estimated Jaccard (fraction of equal
     signature components). Output: (doc_a, doc_b, est_jaccard).
-
-    ``max_bucket_df`` is the production skew/memory guard, analogous to
-    ``max_shingle_df`` in :func:`jaccard_pairs`: buckets whose size
-    exceeds the cap are dropped entirely (a bucket of df docs would emit
-    O(df²) pairs and hold df (doc_id, 16-int sig) structs in one
-    aggregation buffer — a single giant duplicate cluster is the one
-    place this plan can concentrate memory). The cap kills the O(df²)
-    pair explosion outright; the collect-side buffer still materializes
-    once before the filter, but ObjectHashAggregate degrades to
-    sort-based spilling under pressure, so the explosion — not the
-    collect — is the scale killer the cap addresses. Dropping is safe
-    for dedup recall in the same way stop-shingle dropping is: a
-    near-dup cluster that large collides in many buckets and in exact
-    dedup anyway. ``None`` (the default, used by the differential
-    registry entry) keeps every pair.
 
     Plan shape: the expensive lineage (shingle→id→16-min agg) is traversed
     exactly ONCE — the band table is grouped by (band, band_key) into
@@ -300,15 +254,12 @@ def minhash_lsh_pairs(
     signature arrays carried through the bucket structs (a 16-term
     zip_with), so no join back to the signatures is needed.
     """
-    sigs = minhash_signatures(docs, n, text_col, id_col)
-    bands = _band_table(sigs)
+    bands = _band_table(minhash_signatures(docs))
     buckets = (
         bands.groupBy("band", "band_key")
         .agg(F.collect_list(F.struct("doc_id", "sig")).alias("ms"))
         .filter(F.size("ms") >= 2)
     )
-    if max_bucket_df is not None:
-        buckets = buckets.filter(F.size("ms") <= max_bucket_df)
     matches = (
         "aggregate(zip_with(a.sig, b.sig, "
         "(x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END), 0, (acc, t) -> acc + t)"
@@ -327,12 +278,7 @@ def minhash_lsh_pairs(
 
 
 def jaccard_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_shingle_df: int | None = 100,
+    docs: DataFrame, threshold: float = 0.5, max_shingle_df: int | None = 100
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity for pairs sharing ≥1 shingle.
 
@@ -357,7 +303,7 @@ def jaccard_pairs(
     nested-``transform``; the blow-up per posting is bounded by the df
     cap (≤ cap²/2 pairs).
     """
-    sh = doc_shingles(docs, n, text_col, id_col)
+    sh = doc_shingles(docs)
     groups = sh.groupBy("shingle").agg(F.expr("collect_list(doc_id) AS ds"))
     if max_shingle_df is not None:
         groups = groups.filter(f"size(ds) <= {max_shingle_df}")
@@ -389,11 +335,7 @@ def jaccard_pairs(
     )
 
 
-def simhash(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """Per-document SimHash fingerprint (SIMHASH_BITS bits) over unigram
     tokens weighted by occurrence count.
 
@@ -403,10 +345,7 @@ def simhash(
     candidates then share a fingerprint nibble at the same position
     (pigeonhole over Hamming distance ≤ 3 for 16 bits / 4 nibbles).
     """
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("tok"),
-    )
+    toks = docs.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok"))
     ids = dictionary_ids(toks, "tok", "tid", "doc_id")
     params = MINHASH_PARAMS[:SIMHASH_BITS]
     # Parsed-string form of the same expressions (see doc_shingles note):

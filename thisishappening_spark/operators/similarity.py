@@ -39,6 +39,10 @@ _HP_MULT = 2_654_435_761
 _HP_C = 12_345
 _HP_M = 2_147_483_647
 
+# ANN index shape: ANN_TABLES hash tables of ANN_PLANES-bit buckets.
+ANN_TABLES = 8
+ANN_PLANES = 4
+
 
 def as_double_vec(col: str) -> Column:
     """array<float> → array<double> so arithmetic runs in IEEE double on
@@ -75,10 +79,10 @@ def norm2_dec(a: str) -> str:
     return dot_dec(a, a)
 
 
-def cosine(dot: str, n2a: str, n2b: str, round_to: int = 6) -> str:
+def cosine(dot: str, n2a: str, n2b: str) -> str:
     return (
         f"round(CAST({dot} AS DOUBLE) / (sqrt(CAST({n2a} AS DOUBLE)) * "
-        f"sqrt(CAST({n2b} AS DOUBLE))), {round_to})"
+        f"sqrt(CAST({n2b} AS DOUBLE))), 6)"
     )
 
 
@@ -94,20 +98,14 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
     ).filter(f"rank <= {k}")
 
 
-def cosine_topk(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk(emb: DataFrame, query_ids: list[int], k: int = 3) -> DataFrame:
     """Top-k cosine neighbors for each query vector (excluding self).
 
     Output: (query_id, neighbor_id, cos_sim, rank). Queries are broadcast
     (tiny side), so the corpus scan never shuffles; ranking uses
     row_number over (cos desc, neighbor_id) for a deterministic tie-break.
     """
-    v = emb.select(F.col(id_col).alias("vid"), as_double_vec(vec_col).alias("v"))
+    v = emb.select(F.col("vec_id").alias("vid"), as_double_vec("embedding").alias("v"))
     norms = v.select("vid", "v", F.expr(f"{norm2_dec('v')} AS n2"))
     q = norms.filter(F.col("vid").isin(query_ids)).selectExpr(
         "vid AS query_id", "v AS qv", "n2 AS qn2"
@@ -131,10 +129,10 @@ def _lattice_matrix(n_planes: int, dim: int):
     return comp.reshape(n_planes, dim)
 
 
-def lsh_buckets_udf(n_tables: int = 8, planes_per_table: int = 4, dim: int = 64):
-    """Arrow-batched pandas UDF: vector → array of ``n_tables`` bucket
-    ids (one ``planes_per_table``-bit bucket per table). Table t uses
-    global planes [t·k, (t+1)·k) of the deterministic lattice.
+def lsh_buckets_udf(dim: int):
+    """Arrow-batched pandas UDF: vector → array of ``ANN_TABLES`` bucket
+    ids (one ``ANN_PLANES``-bit bucket per table). Table t uses global
+    planes [t·ANN_PLANES, (t+1)·ANN_PLANES) of the deterministic lattice.
 
     Dense (batch × dim) @ (dim × planes) is exactly what numpy/BLAS is
     for: one matmul per Arrow batch replaces 32 per-row expression
@@ -146,67 +144,56 @@ def lsh_buckets_udf(n_tables: int = 8, planes_per_table: int = 4, dim: int = 64)
     """
     from pyspark.sql.functions import pandas_udf
 
-    H = _lattice_matrix(n_tables * planes_per_table, dim).T  # dim × planes
-    weights = 1 << np.arange(planes_per_table, dtype=np.int64)
+    H = _lattice_matrix(ANN_TABLES * ANN_PLANES, dim).T  # dim × planes
+    weights = 1 << np.arange(ANN_PLANES, dtype=np.int64)
 
     @pandas_udf("array<int>")
     def buckets(vs: pd.Series) -> pd.Series:
         mat = np.vstack(vs.to_numpy())  # batch × dim
         proj = mat @ H  # batch × (tables·k)
         bits = (proj > 0).astype(np.int64)
-        bk = (bits.reshape(len(vs), n_tables, planes_per_table) * weights).sum(axis=2)
+        bk = (bits.reshape(len(vs), ANN_TABLES, ANN_PLANES) * weights).sum(axis=2)
         return pd.Series(list(bk.astype("int32")))
 
     return buckets
 
 
 def ann_lsh_topk(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 3,
-    n_tables: int = 8,
-    planes_per_table: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    emb: DataFrame, query_ids: list[int], k: int = 3, dim: int = 64
 ) -> DataFrame:
     """Approximate top-k via multi-table sign-LSH: score only candidates
     that share a bucket with the query, or a bucket one bit away from it
-    (Hamming-1 probes), in ≥1 of ``n_tables`` tables, then exact-rerank
+    (Hamming-1 probes), in ≥1 of ``ANN_TABLES`` tables, then exact-rerank
     with the same cosine as the brute-force path.
 
-    Scale: the index is ``n_tables`` small (tbl, bucket) entries per
+    Scale: the index is ``ANN_TABLES`` small (tbl, bucket) entries per
     vector; candidate generation is an equi-join on (tbl, bucket), so the
     cost is Σ probed-bucket occupancies — not n². Recall follows the
-    standard S-curve 1-(1-P_table)^L with per-bit p = 1-θ/π. Honest
-    caveat: the synthetic test embeddings are isotropic random — the
-    worst case for any ANN index (top-3 cosine ≈ 0.3, barely above
-    noise) — so the default config measured 0.93 recall@3 there only by
-    probing a large corpus fraction. On real embedding corpora, where
-    neighbors are genuinely close (p → 1), the same config is both
-    high-recall and selective; tune n_tables/planes_per_table to the
-    corpus. The pytest harness measures recall against
+    standard S-curve 1-(1-P_table)^L with per-bit p = 1-θ/π. Caveat: the
+    synthetic test embeddings are isotropic random — the worst case for
+    any ANN index (top-3 cosine ≈ 0.3, barely above noise) — so this
+    index shape reaches 0.93 recall@3 there only by probing a large
+    corpus fraction. On real embedding corpora, where neighbors are
+    genuinely close (p → 1), the same shape is both high-recall and
+    selective. The pytest harness measures recall against
     :func:`cosine_topk`.
 
-    Rerank-cost note (r21): a (query, candidate) pair that collides in m
-    of the L·(1+probes) probed buckets used to be scored m times and
-    deduped on the scores; candidates are now deduped BEFORE the exact
-    rerank (measured multiplicity 3.1× on the sf0.1 fixture), so each
-    pair pays the decimal-exact dot product once.
-
-    Dedup-key note (r22): the dedup groups on the bare (query_id, vid)
-    pair and re-attaches (v, n2) with ``first()``, since both are
-    functionally determined by vid. The grouping then hashes two longs
-    instead of normalizing a 64-double vector per collision row, and no
-    re-join against the corpus is needed.
+    A (query, candidate) pair collides in up to L·(1+probes) probed
+    buckets (multiplicity 3.1× on the sf0.1 fixture), so candidates are
+    deduped BEFORE the exact rerank and each pair pays the decimal-exact
+    dot product once. The dedup groups on the bare (query_id, vid) pair
+    and re-attaches (v, n2) with ``first()``, since both are functionally
+    determined by vid: the grouping hashes two longs instead of
+    normalizing a 64-double vector per collision row, and no re-join
+    against the corpus is needed.
     """
-    v = emb.select(F.col(id_col).alias("vid"), as_double_vec(vec_col).alias("v"))
+    v = emb.select(F.col("vec_id").alias("vid"), as_double_vec("embedding").alias("v"))
     base = v.select("vid", "v", F.expr(f"{norm2_dec('v')} AS n2"))
-    buckets = lsh_buckets_udf(n_tables, planes_per_table, dim)
+    buckets = lsh_buckets_udf(dim)
     ent = base.select(
         "vid", "v", "n2", F.posexplode(buckets(F.col("v"))).alias("tbl", "bucket")
     )
-    probes = ["bucket"] + [f"bucket ^ {1 << j}" for j in range(planes_per_table)]
+    probes = ["bucket"] + [f"bucket ^ {1 << j}" for j in range(ANN_PLANES)]
     q = ent.filter(F.col("vid").isin(query_ids)).selectExpr(
         "vid AS query_id",
         "tbl AS q_tbl",
@@ -216,18 +203,10 @@ def ann_lsh_topk(
         F.broadcast(q),
         F.expr("tbl = q_tbl AND bucket = probe_bucket AND vid != query_id"),
     )
-    # Dedup before the rerank, keyed on the bare (query_id, vid) pair:
-    # (v, n2) are functionally determined by vid, so first() re-attaches
-    # the same values the r21 distinct-on-all-four-columns kept, but the
-    # grouping hashes/compares two longs instead of normalizing a
-    # 64-double array per collision row
-    # (knownfloatingpointnormalized(transform(v, …)) in the r21 plan).
-    # r22 A/B (8 rounds/side): 1.99/1.28 vs 1.94/1.39 med-of-med/min —
-    # a wash on medians, min favors this; bit-identical at three SFs. An
-    # ids-only distinct + corpus re-join variant was also built and
-    # rejected (consistent ~0.85× locally: the extra join stage cost more
-    # than the slimmer exchange saved, and selective probing favors
-    # shuffling only candidate vectors at scale anyway).
+    # Dedup before the rerank (see docstring). Carrying (v, n2) through
+    # the aggregate beats an ids-only distinct plus a corpus re-join: the
+    # extra join stage costs more than the slimmer exchange saves, and
+    # selective probing favors shuffling only candidate vectors at scale.
     uniq = cand.groupBy("query_id", "vid").agg(
         F.first("v").alias("v"), F.first("n2").alias("n2")
     )

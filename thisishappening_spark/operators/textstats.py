@@ -64,19 +64,14 @@ def stopword_ratio(tok_col: str, stopwords: list[str]) -> str:
     return f"CAST({hits} AS DOUBLE) / size({tok_col})"
 
 
-def doc_quality(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    keep_cols: list[str] | None = None,
-) -> DataFrame:
+def doc_quality(docs: DataFrame, keep_cols: list[str] | None = None) -> DataFrame:
     """Per-document quality metrics + pass/fail decision.
 
     Metrics follow the usual corpus-filter recipe: token count bounds,
     mean token length bounds, stopword-ratio ceiling. One projection over
     the scan; no shuffle.
     """
-    t = f"split({text_col}, ' ')"
+    t = "split(text, ' ')"
     n_tok = f"size({t})"
     mean_len = (
         f"CAST(aggregate({t}, CAST(0 AS BIGINT), (acc, x) -> acc + length(x)) "
@@ -88,7 +83,7 @@ def doc_quality(
         f"AND ({mean_len}) <= 12.0D AND ({sw}) <= 0.5D"
     )
     return docs.selectExpr(
-        f"{id_col} AS doc_id",
+        "doc_id",
         *(keep_cols or []),
         f"{n_tok} AS n_tokens",
         f"{mean_len} AS mean_token_len",
@@ -97,7 +92,7 @@ def doc_quality(
     )
 
 
-def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Heuristic language ID: stopword-hit ratio per language, argmax with
     an 'unknown' floor. Deterministic ties break by language code order
     (en < es < fr by construction below).
@@ -108,10 +103,7 @@ def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     document. The earlier formulation — three higher-order ``filter``
     lambdas per row — fell out of codegen and re-tokenized each row ~7×.
     """
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
-    )
+    toks = docs.select("doc_id", F.explode(tokens(F.lower(F.col("text")))).alias("tok"))
     hits = toks.groupBy("doc_id").agg(
         *[
             F.expr(
@@ -141,28 +133,20 @@ def lang_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     return scored.selectExpr("doc_id", f"{pred} AS pred_lang", "score_en")
 
 
-def doc_fingerprint(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    window: int = 3,
-) -> DataFrame:
+def doc_fingerprint(docs: DataFrame) -> DataFrame:
     """Rolling-hash document fingerprint: min over token-trigram window
     hashes h = (tid1·31² + tid2·31 + tid3) mod p.
 
     tid is the token's ``dedup.ranked_dictionary`` id (rank in the sorted
     distinct-token dictionary), the same token-id path MinHash and SimHash
     use: engine-portable integer arithmetic the DuckDB oracle reproduces
-    bit-for-bit. A document with fewer tokens than ``window`` gets a NULL
+    bit-for-bit. A document with fewer than three tokens gets a NULL
     fingerprint.
 
     The min-of-window-hashes is the 1-fingerprint special case of
     winnowing.
     """
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(tokens(F.col(text_col))).alias("pos", "tok"),
-    )
+    toks = docs.select("doc_id", F.posexplode(tokens(F.col("text"))).alias("pos", "tok"))
     ids = dictionary_ids(toks, "tok", "tid", "doc_id", "pos")
     seq = ids.groupBy("doc_id").agg(
         F.expr(
@@ -171,8 +155,8 @@ def doc_fingerprint(
         )
     )
     w = (
-        f"CASE WHEN size(tids) < {window} THEN CAST(array() AS ARRAY<BIGINT>) "
-        f"ELSE transform(sequence(1, size(tids) - {window - 1}), "
+        "CASE WHEN size(tids) < 3 THEN CAST(array() AS ARRAY<BIGINT>) "
+        "ELSE transform(sequence(1, size(tids) - 2), "
         f"i -> (CAST(element_at(tids, i) AS BIGINT) * 961 "
         f"+ element_at(tids, i + 1) * 31 + element_at(tids, i + 2)) % {FP_P}) END"
     )

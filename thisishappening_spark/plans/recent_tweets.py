@@ -1,11 +1,10 @@
 """The reference's most-called query path as parameterized DataFrame plans.
 
 `get_recent_tweets` (reference data_base.py:307-382) is called 4× per
-arriving tweet; `count_tweets` (:276-305), `get_recent_events` (:90-116)
-and the event PK lookup (:134-139) round out the surface. Each builder
-here composes the exact predicate stack (Q1-Q8 in SURVEY.md §2.2) onto any
-tweets- or events-shaped DataFrame and lets Catalyst push every filter to
-the scan.
+arriving tweet; `count_tweets` (:276-305) and the PK lookup (:134-139)
+round out the surface. Each builder composes the reference's predicate
+stack (Q1-Q6, Q8 in SURVEY.md §2.2) onto a tweets-shaped DataFrame and
+lets Catalyst push every filter to the scan.
 
 Scale notes: every query carries a time bound (Q1), which on a
 date-partitioned table becomes partition pruning — the 100 TB plan reads
@@ -35,13 +34,13 @@ def _ts_lit(t: dt.datetime) -> str:
     return f"TIMESTAMP '{t:%Y-%m-%d %H:%M:%S.%f}'"
 
 
-def _time_window(ts_col: str, timestamp: dt.datetime, hours: float) -> str:
-    """Q1: closed sliding interval `[timestamp - hours, timestamp]`
-    (reference data_base.py:334-342). SQL-string form (r21 convention,
-    sqlexpr.py — the Column build of this plan family cost ~400 Py4J
+def _time_window(timestamp: dt.datetime, hours: float) -> str:
+    """Q1: closed sliding interval `[timestamp - hours, timestamp]` on
+    created_at (reference data_base.py:334-342). SQL-string form
+    (sqlexpr.py — the Column build of this plan family cost ~400 Py4J
     round trips per construction)."""
     start = timestamp - dt.timedelta(hours=hours)
-    return f"{ts_col} >= {_ts_lit(start)} AND {ts_col} <= {_ts_lit(timestamp)}"
+    return f"created_at >= {_ts_lit(start)} AND created_at <= {_ts_lit(timestamp)}"
 
 
 def recent_tweets(
@@ -54,8 +53,6 @@ def recent_tweets(
     place_type_or_coords: bool = True,
     include_quote_status: bool = True,
     include_reply_status: bool = True,
-    include_deleted_status: bool = False,
-    time_col: str = "created_at",
     ordered: bool = True,
 ) -> DataFrame:
     """Mirror of get_recent_tweets (reference data_base.py:307-382),
@@ -73,9 +70,10 @@ def recent_tweets(
     - Q3: when `place_type_or_coords` and BOTH args given, the two combine
       with OR; otherwise each applies independently (data_base.py:355-368).
     - Q4/Q5 use `IS NOT TRUE` — NULL rows are KEPT (data_base.py:370-376).
-    - Q6 `deleted_at IS NULL` (data_base.py:378-380).
+    - Q6 `deleted_at IS NULL` (data_base.py:378-380): deleted tweets are
+      never returned.
     """
-    conds = [_time_window(time_col, timestamp, hours)]
+    conds = [_time_window(timestamp, hours)]
 
     if bounding_box is not None:
         conds.append(inbounds_half_open("longitude", "latitude", bounding_box))
@@ -98,11 +96,10 @@ def recent_tweets(
         conds.append("NOT (is_quote_status <=> TRUE)")
     if not include_reply_status:
         conds.append("NOT (is_reply_status <=> TRUE)")
-    if not include_deleted_status:
-        conds.append("deleted_at IS NULL")
+    conds.append("deleted_at IS NULL")
 
     df = tweets.filter(" AND ".join(f"({c})" for c in conds))
-    return df.orderBy(F.desc(time_col)) if ordered else df
+    return df.orderBy(F.desc("created_at")) if ordered else df
 
 
 def count_tweets(
@@ -110,32 +107,15 @@ def count_tweets(
     timestamp: dt.datetime,
     hours: float = 0,
     bounding_box: BoundingBox | None = None,
-    time_col: str = "created_at",
 ) -> DataFrame:
     """A1: scalar count with Q1 + Q2 filters (reference data_base.py:276-305)."""
-    cond = _time_window(time_col, timestamp, hours)
+    cond = _time_window(timestamp, hours)
     if bounding_box is not None:
         cond += " AND " + inbounds_half_open("longitude", "latitude", bounding_box)
     return tweets.filter(cond).agg(F.expr("count(status_id_str) AS n_tweets"))
 
 
-def recent_events(
-    events: DataFrame,
-    timestamp: dt.datetime,
-    hours: float = 1,
-    event_type: list[str] | None = None,
-    time_col: str = "timestamp",
-) -> DataFrame:
-    """Q7: time window + `event_type IN (...) OR event_type IS NULL`
-    (reference data_base.py:90-116), newest-first (O2)."""
-    cond = _time_window(time_col, timestamp, hours)
-    if event_type is not None:
-        types_pred = in_list("event_type", [sql_str(t) for t in event_type])
-        cond = f"({cond}) AND ({types_pred} OR event_type IS NULL)"
-    return events.filter(cond).orderBy(F.desc(time_col))
-
-
-def event_by_id(events: DataFrame, event_id: int, id_col: str = "id") -> DataFrame:
-    """Q8 PK lookup (reference data_base.py:134-139)."""
-    return events.filter(F.col(id_col) == F.lit(event_id))
+def event_by_id(events: DataFrame, event_id: int) -> DataFrame:
+    """Q8 PK lookup on ``id`` (reference data_base.py:134-139)."""
+    return events.filter(F.col("id") == F.lit(event_id))
 

@@ -158,9 +158,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings pipeline sits above it.
     """
     docs = load_table(spark, sf_dir, "documents", fan_out=True)
-    return dedup.jaccard_pairs(
-        docs, n=3, threshold=0.5, max_shingle_df=JACCARD_MAX_SHINGLE_DF
-    )
+    return dedup.jaccard_pairs(docs, threshold=0.5, max_shingle_df=JACCARD_MAX_SHINGLE_DF)
 
 
 @query(

@@ -10,9 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from thisishappening_spark.registry import dec, dsum, query
+from thisishappening_spark.registry import dsum, query
 from thisishappening_spark.sources.tables import load_table
 
 # Shared decimal-exact revenue term (the oracle SQL twin appears in each

@@ -47,11 +47,8 @@ def query(name: str, oracle: str | None):
     return deco
 
 
-def dec(col: Column, scale: int = 2) -> Column:
-    """Cast to exact decimal for order-independent, cross-engine-exact sums."""
-    return col.cast(f"decimal(18,{scale})")
-
-
-def dsum(col: Column, scale: int = 2) -> Column:
-    return F.sum(dec(col, scale)).cast("double")
+def dsum(col: Column) -> Column:
+    """Sum as exact DECIMAL(18,2) for an order-independent,
+    cross-engine-exact total, returned as DOUBLE."""
+    return F.sum(col.cast("decimal(18,2)")).cast("double")
 

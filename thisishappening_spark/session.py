@@ -26,15 +26,15 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 def get_spark(
     app_name: str = "thisishappening-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """A ``local[$SPARK_GRAFT_CPUS]`` session with the configs above;
+    ``extra_conf`` entries override them."""
     cpus = DEFAULT_CPUS
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+        .master(f"local[{cpus}]")
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -201,8 +201,10 @@ def invalidate_relation_cache(
 
     ``spark=None`` clears every session's entries; ``path=None`` clears
     every path for the given session. ``path`` may name the table file/dir
-    itself or the sf_dir the table was loaded from (both resolve by
-    absolute-path prefix). Also refreshes Spark's own per-path file-index
+    itself or the sf_dir the table was loaded from: a cached table is
+    dropped when its absolute path equals ``path`` or lies under it, whole
+    path components only (``/d/sf0.1`` does not match ``/d/sf0.10/...``).
+    Also refreshes Spark's own per-path file-index
     cache via ``catalog.refreshByPath`` so the re-read re-lists.
     """
     sessions = [spark] if spark is not None else list(_RELATION_CACHE.keys())
@@ -214,8 +216,10 @@ def invalidate_relation_cache(
             per_session.clear()
             continue
         abs_path = os.path.abspath(path)
-        for key in [k for k in per_session if k.split("::")[0].startswith(abs_path)]:
-            del per_session[key]
+        for key in list(per_session):
+            table = key.split("::")[0]
+            if table == abs_path or table.startswith(abs_path + os.sep):
+                del per_session[key]
         try:
             s.catalog.refreshByPath(abs_path)
         except Exception:
